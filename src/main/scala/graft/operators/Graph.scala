@@ -41,6 +41,12 @@ object Graph {
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
   }
 
+  /** True when both id columns are BIGINT — the id check in front of the
+    * primitive-array driver tiers: they read ids with getLong and emit
+    * BIGINT ids, so only BIGINT callers get the twin's schema back. */
+  private def bigintIds(df: DataFrame, uCol: String, vCol: String): Boolean =
+    df.schema(uCol).dataType == LongType && df.schema(vCol).dataType == LongType
+
   /** `array_sort(collect_set(c))` with the primitive-long native fold
     * ([[org.apache.spark.sql.graft.SortedLongSet]] — no per-value boxing,
     * one sort at eval) when the element type is integral; elements widen
@@ -184,10 +190,7 @@ object Graph {
     * on the null min). */
   def bfsLevelsUndirected(pairs: DataFrame, uCol: String, vCol: String,
                           maxDepth: Int, earlyExit: Boolean = false): DataFrame = {
-    val longBfsIds = pairs.schema(uCol).dataType ==
-      org.apache.spark.sql.types.LongType &&
-      pairs.schema(vCol).dataType == org.apache.spark.sql.types.LongType
-    if (longBfsIds && resolveBroadcast(None, pairs)) {
+    if (bigintIds(pairs, uCol, vCol) && resolveBroadcast(None, pairs)) {
       // DRIVER-RESIDENT BFS (the multiSourceBfs discipline, one source):
       // the size gate says the pair stream fits driver memory — one
       // collect, one CSR walk from the minimum id, natural early exit
@@ -457,10 +460,7 @@ object Graph {
   def pagerankUndirected(pairs: DataFrame, uCol: String, vCol: String,
                          iters: Int): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val longPrIds = pairs.schema(uCol).dataType ==
-      org.apache.spark.sql.types.LongType &&
-      pairs.schema(vCol).dataType == org.apache.spark.sql.types.LongType
-    if (longPrIds && resolveBroadcast(None, pairs)) {
+    if (bigintIds(pairs, uCol, vCol) && resolveBroadcast(None, pairs)) {
       // DRIVER-RESIDENT rounds (the kcorePeel discipline): the size gate
       // says the pair stream fits driver memory — one collect, the exact
       // integer recurrence over the deduped CSR. The distributed chain
@@ -530,10 +530,7 @@ object Graph {
                            iters: Int, nSeeds: Int): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(nSeeds >= 1, s"nSeeds must be >= 1, got $nSeeds")
-    val longPprIds = pairs.schema(uCol).dataType ==
-      org.apache.spark.sql.types.LongType &&
-      pairs.schema(vCol).dataType == org.apache.spark.sql.types.LongType
-    if (longPprIds && resolveBroadcast(None, pairs)) {
+    if (bigintIds(pairs, uCol, vCol) && resolveBroadcast(None, pairs)) {
       // DRIVER-RESIDENT rounds (the pagerankUndirected tier with the PPR
       // restart vector: seeds = nSeeds smallest ids = first indices).
       val sess = pairs.sparkSession
@@ -2030,10 +2027,7 @@ object Graph {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     // frontier/label frames are node-sized — bounded by the pair stream
     val bFrontier = resolveBroadcast(bcastFrontier, pairs)
-    val longLpIds = pairs.schema(uCol).dataType ==
-      org.apache.spark.sql.types.LongType &&
-      pairs.schema(vCol).dataType == org.apache.spark.sql.types.LongType
-    if (bFrontier && longLpIds) {
+    if (bFrontier && bigintIds(pairs, uCol, vCol)) {
       // FULLY driver-resident min-label fold (the kcorePeel discipline):
       // the gate says the pair stream fits driver memory, so the r-round
       // synchronous min fold runs over one CSR off one collect — the
@@ -2187,10 +2181,7 @@ object Graph {
                                   bcastFrontier: Option[Boolean] = None): DataFrame = {
     // frontier/label frames are node-sized — bounded by the pair stream
     val bFrontier = resolveBroadcast(bcastFrontier, edges)
-    val longCcIds = edges.schema(uCol).dataType ==
-      org.apache.spark.sql.types.LongType &&
-      edges.schema(vCol).dataType == org.apache.spark.sql.types.LongType
-    if (bFrontier && longCcIds) {
+    if (bFrontier && bigintIds(edges, uCol, vCol)) {
       // DRIVER-RESIDENT union-find (the kcorePeel discipline): the gate
       // says the edge list fits driver memory, so the min-label fixpoint
       // — a distributed loop paying one count action per round, ~37 jobs
@@ -2276,26 +2267,25 @@ object Graph {
     * centrality fan-out pattern (closeness/harmonic need BFS from many
     * seeds; at scale you batch the seeds, not the loop). Integer-exact
     * cross-engine; the DuckDB twin is the depth-bounded recursive UNION
-    * carrying the src column. */
+    * carrying the src column. BIGINT ids that pass the `bcastState` gate
+    * run the driver kernel; every other id type always takes the
+    * distributed twin, whatever the flag says. */
   def multiSourceBfs(pairs: DataFrame, uCol: String, vCol: String,
                      nSources: Int, maxDepth: Int,
                      bcastState: Option[Boolean] = None): DataFrame = {
     require(nSources >= 1, s"nSources must be >= 1, got $nSources")
     require(maxDepth >= 0, s"maxDepth must be >= 0, got $maxDepth")
     // the (src, node) level table is ≤ nSources × node-sized
-    val bState = resolveBroadcast(bcastState, pairs, factor = nSources)
-    val longMsIds = pairs.schema(uCol).dataType ==
-      org.apache.spark.sql.types.LongType &&
-      pairs.schema(vCol).dataType == org.apache.spark.sql.types.LongType
-    if (bState && longMsIds) {
+    if (bigintIds(pairs, uCol, vCol) &&
+        resolveBroadcast(bcastState, pairs, factor = nSources)) {
       // FULLY driver-resident multi-source BFS (the kcorePeel/pathCounts
       // discipline): the gate says the pair stream fits driver memory,
       // so all sources BFS over one CSR adjacency off one collect — no
       // oriented checkpoint, no per-round candidate job. Duplicate pairs
       // are harmless to level-BFS (first discovery wins either way).
-      // Restricted to BIGINT ids so the schema matches the twins; the
-      // LocalRelation-loop tier below keeps non-long callers, and the
-      // all-distributed loop remains the past-broadcast twin.
+      // Restricted to BIGINT ids so the schema matches the twin; every
+      // other id type, and every past-broadcast graph, takes the
+      // all-distributed loop below.
       val sess = pairs.sparkSession
       val raw = pairs.select(col(uCol), col(vCol))
         .collect2
@@ -2345,61 +2335,6 @@ object Graph {
     val e = orientedAdjacency(pairs, uCol, vCol).localCheckpoint()
     val sess = e.sparkSession
     val aqeWas = sess.conf.get("spark.sql.adaptive.enabled", "true")
-    if (bState) {
-      // DRIVER-RESIDENT level state (r18 — the sccPivot/pathCounts
-      // pattern, keyed (src, node)): the pre-r18 loop re-aggregated the
-      // FULL (src, node) state every round and always ran maxDepth
-      // rounds; here each round is ONE cluster job (frontier re-enters
-      // as a LocalRelation broadcast, candidates dedup cluster-side to
-      // frontier-neighborhood size) with first-discovery-wins ≡
-      // min-level merge as a driver map lookup, and the loop EXITS as
-      // soon as a frontier comes back empty (this graph family
-      // saturates well inside the depth cap). `bcastState = false`
-      // keeps the all-distributed loop for nSources × |V| past the
-      // broadcast limit (spec-pinned equal in GraphSpec).
-      try {
-        sess.conf.set("spark.sql.adaptive.enabled", "false")
-        // type-agnostic node keys (the pathCountsLoop discipline):
-        // integer-typed caller columns must keep working
-        val nType = e.schema("__s").dataType
-        val srcIds = e.select(col("__s")).distinct()
-          .orderBy(col("__s")).limit(nSources)
-          .collect().map(_.get(0)).toSeq
-        val lvl = scala.collection.mutable.HashMap[(Any, Any), Int](
-          srcIds.map(s => ((s: Any, s: Any)) -> 0): _*)
-        var frontier: Seq[(Any, Any)] = srcIds.map(s => (s, s))
-        val fSchema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("__src", nType),
-          org.apache.spark.sql.types.StructField("__s", nType)))
-        var i = 1
-        while (i <= maxDepth && frontier.nonEmpty) {
-          val fDf = sess.createDataFrame(
-            scala.jdk.CollectionConverters.SeqHasAsJava(
-              frontier.map { case (s, n) =>
-                org.apache.spark.sql.Row(s, n) }).asJava, fSchema)
-          val cand = e.join(broadcast(fDf), Seq("__s"))
-            .select(col("__src"), col("__t")).distinct().collect()
-          frontier = cand.toSeq.flatMap { r =>
-            val key = (r.get(0), r.get(1))
-            if (lvl.contains(key)) None
-            else { lvl(key) = i; Some(key) }
-          }
-          i += 1
-        }
-        val outRows = lvl.toSeq.map { case ((s, n), l) =>
-          org.apache.spark.sql.Row(s, n, l) }
-        return sess.createDataFrame(
-          scala.jdk.CollectionConverters.SeqHasAsJava(outRows).asJava,
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("src", nType),
-            org.apache.spark.sql.types.StructField("node", nType),
-            org.apache.spark.sql.types.StructField("lvl",
-              org.apache.spark.sql.types.IntegerType, nullable = false))))
-      } finally {
-        sess.conf.set("spark.sql.adaptive.enabled", aqeWas)
-        Dedup.freeCheckpoints(e)
-      }
-    }
     val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val result = try {
       sess.conf.set("spark.sql.adaptive.enabled", "false")
@@ -2471,19 +2406,18 @@ object Graph {
     * HashPartitioning(__t) ⊆ {__s, __t} (exchange-free), replacing the
     * caller-side repartition + distinct EXCHANGE of the whole pair
     * stream with an in-place agg pass — one full exchange of the pair
-    * stream instead of two. */
+    * stream instead of two. BIGINT ids that pass the `bcastVisited` gate
+    * run the driver kernel; every other id type always takes the
+    * distributed twin, whatever the flag says. */
   def pathCounts(pairs: DataFrame, uCol: String, vCol: String,
                  nSources: Int, maxDepth: Int,
                  dedupEdges: Boolean = false,
                  bcastVisited: Option[Boolean] = None): DataFrame = {
     require(nSources >= 1, s"nSources must be >= 1, got $nSources")
-    // visited state is ~ nSources x the node frame — scale the proxy
-    val bVisited = resolveBroadcast(bcastVisited, pairs, factor = nSources)
     require(maxDepth >= 0, s"maxDepth must be >= 0, got $maxDepth")
-    val longPcIds = pairs.schema(uCol).dataType ==
-      org.apache.spark.sql.types.LongType &&
-      pairs.schema(vCol).dataType == org.apache.spark.sql.types.LongType
-    if (bVisited && longPcIds) {
+    // visited state is ~ nSources x the node frame — scale the proxy
+    if (bigintIds(pairs, uCol, vCol) &&
+        resolveBroadcast(bcastVisited, pairs, factor = nSources)) {
       // FULLY driver-resident Brandes forward pass (the kcorePeel /
       // ssspBounded discipline): the nSources-scaled gate says the pair
       // stream itself fits driver memory, so collect it once and run the
@@ -2566,7 +2500,7 @@ object Graph {
     val aqeWas = sess.conf.get("spark.sql.adaptive.enabled", "true")
     val result = try {
       sess.conf.set("spark.sql.adaptive.enabled", "false")
-      val state = pathCountsLoop(e, nSources, maxDepth, bVisited)
+      val state = pathCountsLoop(e, nSources, maxDepth)
       state.select(col("__src").as("src"), col("__n").as("node"),
         col("__lvl").as("lvl"), col("__sig").as("paths"))
     } finally {
@@ -2583,144 +2517,88 @@ object Graph {
     * Returns the final (__src, __n, __lvl, __sig) state as one coalesced
     * checkpoint; every per-round intermediate is freed before returning,
     * the result's blocks belong to the caller. */
-  private def pathCountsLoop(e: DataFrame, nSources: Int, maxDepth: Int,
-                             bVisited: Boolean): DataFrame = {
+  private def pathCountsLoop(e: DataFrame, nSources: Int,
+                             maxDepth: Int): DataFrame = {
     val sess = e.sparkSession
     // every node appears on the __t side of the oriented frame and the
-      // edges are __t-partitioned, so the seed distinct is exchange-free.
-      // The nSources seed ids COLLECT to the driver (index-sized by
-      // contract — a handful of probe sources, the same bounded trade
-      // Similarity.kmeansAssignInt8 makes for its seed ids): the seed
-      // state becomes a LocalRelation, so round 1's two broadcast builds
-      // are driver-local (no cluster job) and the old seed-state
-      // checkpoint job disappears — the r15 chain-shortening lever.
-      val seedIds = e.select(col("__t").as("__s")).distinct()
-        .orderBy(col("__s")).limit(nSources).collect().map(_.get(0))
-      val tType = e.schema("__t").dataType
-      val seedSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("__src", tType),
-        org.apache.spark.sql.types.StructField("__n", tType),
-        org.apache.spark.sql.types.StructField("__lvl",
-          org.apache.spark.sql.types.IntegerType, nullable = false),
-        org.apache.spark.sql.types.StructField("__sig",
-          org.apache.spark.sql.types.LongType, nullable = false)))
-      val seedRows = seedIds.map(v =>
-        org.apache.spark.sql.Row(v, v, 0, 1L)).toSeq
-      if (bVisited) {
-        // DRIVER-RESIDENT (src, node) state (r17 chain-shortening): the
-        // state is nSources × node-sized and resolveBroadcast just
-        // declared it broadcast-eligible — what fits an executor
-        // broadcast fits the driver. Each round is then ONE cluster job:
-        // the frontier re-enters as a LocalRelation broadcast (built
-        // driver-side, no job), the candidate σ-fold still rides the
-        // __t-partitioned edge frame exchange-free, and only the
-        // (src, node)-keyed fold RESULT is collected; the anti-merge
-        // against visited keys is a driver HashSet lookup instead of a
-        // per-round broadcast anti-join (two build jobs gone per round).
-        // Arithmetic identical (integer σ sums, min levels, BFS
-        // discovery order); the `bVisited = false` twin below keeps the
-        // all-distributed loop for nSources × |V| past the broadcast
-        // limit (spec-pinned equal in GraphSpec).
-        val visited = scala.collection.mutable.HashSet[(Any, Any)](
-          seedIds.map(v => (v, v)): _*)
-        val state = scala.collection.mutable.ArrayBuffer[
-          org.apache.spark.sql.Row](seedRows: _*)
-        var frontier: Seq[org.apache.spark.sql.Row] = seedRows
-        var i = 1
-        while (i <= maxDepth && frontier.nonEmpty) {
-          val fDf = sess.createDataFrame(
-            scala.jdk.CollectionConverters.SeqHasAsJava(frontier).asJava,
-            seedSchema)
-          val folded = e.join(broadcast(fDf.select(col("__src"),
-              col("__n").as("__s"), col("__sig"), col("__lvl"))), Seq("__s"))
-            .select(col("__src"), col("__t").as("__n"), col("__sig"),
-              col("__lvl"))
-            .groupBy(col("__src"), col("__n"))
-            .agg(sum(col("__sig")).as("__c"),
-              (min(col("__lvl")) + 1).as("__nl"))
-            .collect()
-          frontier = folded.toSeq.flatMap { r =>
-            val key = (r.get(0), r.get(1))
-            if (visited(key)) None
-            else {
-              visited += key
-              Some(org.apache.spark.sql.Row(
-                r.get(0), r.get(1), r.getInt(3), r.getLong(2)))
-            }
-          }
-          state ++= frontier
-          i += 1
-        }
-        return sess.createDataFrame(
-          scala.jdk.CollectionConverters.SeqHasAsJava(state.toSeq).asJava,
-          seedSchema)
-      }
-      // EAGER localCheckpoint per round (not lazy persist): each round's
-      // plan references the previous round TWICE (push side + visited
-      // side), and the two async broadcast-build futures would otherwise
-      // race to materialize the same uncached plan — concurrent
-      // first-readers of an InMemoryRelation each compute it, and the
-      // recompute cascades through the round chain (measured 3× CPU).
-      // Checkpoint blocks are computed exactly once, in round order.
-      val spent = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-      var state = sess.createDataFrame(
-        scala.jdk.CollectionConverters.SeqHasAsJava(seedRows).asJava,
-        seedSchema)
-      // the frontier is the rows DISCOVERED last round (all new at seed).
-      // The round's level is carried as a COLUMN from the frontier
-      // (lvl + 1), not a lit(i) literal: a baked-in literal makes each
-      // round's generated code a distinct class, so every round runs
-      // JIT-cold — with identical plan text all rounds share one codegen
-      // class, hot from round 2 (measured: the big rounds at first-run
-      // speed were the dominant loop cost).
-      var frontier = state
-      var i = 1
-      while (i <= maxDepth) {
-        // candidate fold: the frontier broadcasts into the
-        // __t-partitioned edges (map-only push); the (src, node) sum
-        // rides the alias partitioning — zero exchange for the round's
-        // dominant stream. min(__lvl) is exact: every frontier row
-        // carries the same level within a round.
-        val d = frontier.select(col("__src"), col("__n").as("__s"),
-          col("__sig"), col("__lvl"))
-        val cand = e.join(broadcast(d), Seq("__s"))
-          .select(col("__src"), col("__t").as("__n"), col("__sig"),
-            col("__lvl"))
-          .groupBy(col("__src"), col("__n"))
-          .agg(sum(col("__sig")).as("__c"),
-            (min(col("__lvl")) + 1).as("__nl"))
-        // delta merge as an ANTI against the visited keys: candidates
-        // hitting an existing (src, node) are discarded (their level is
-        // smaller by BFS — the "keep existing" arm); the survivors ARE
-        // this round's discoveries, σ already summed. On the broadcast
-        // path the anti runs IN the fold's stage (no exchange, no join
-        // of the state table) — a whole round is one riding stage plus
-        // its two driver broadcast builds, and state is only ever
-        // UNIONED, never re-aggregated or re-shuffled. `bVisited =
-        // false` is the 100×-scale twin for graphs where nSources × |V|
-        // outgrows a broadcast: a shuffled-hash anti (state exchanges
-        // per round, delta-merge asymptotics unchanged) — spec-pinned
-        // equal in GraphSpec.
-        val vis = state.select(col("__src"), col("__n"))
-        val visSide = if (bVisited) broadcast(vis)
-          else vis.hint("shuffle_hash")
-        val newRows = cand.join(visSide, Seq("__src", "__n"), "left_anti")
-          .select(col("__src"), col("__n"), col("__nl").as("__lvl"),
-            col("__c").as("__sig"))
-          .ckpt()
-        spent += newRows
-        frontier = newRows
-        state = state.unionByName(newRows)
-        i += 1
-      }
-      // coalesce the union-of-rounds (1 + rounds × par cached parts)
-      // back to par partitions — no exchange, just fewer tiny tasks for
-      // the result checkpoint and its consumers
-      val out = state
-        .coalesce(sess.sparkContext.defaultParallelism)
+    // edges are __t-partitioned, so the seed distinct is exchange-free.
+    // The nSources seed ids COLLECT to the driver (index-sized by
+    // contract — a handful of probe sources, the same bounded trade
+    // Similarity.kmeansAssignInt8 makes for its seed ids): the seed
+    // state becomes a LocalRelation, so round 1's broadcast build is
+    // driver-local (no cluster job) and the old seed-state checkpoint
+    // job disappears — the r15 chain-shortening lever.
+    val seedIds = e.select(col("__t").as("__s")).distinct()
+      .orderBy(col("__s")).limit(nSources).collect().map(_.get(0))
+    val tType = e.schema("__t").dataType
+    val seedSchema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("__src", tType),
+      org.apache.spark.sql.types.StructField("__n", tType),
+      org.apache.spark.sql.types.StructField("__lvl",
+        org.apache.spark.sql.types.IntegerType, nullable = false),
+      org.apache.spark.sql.types.StructField("__sig",
+        org.apache.spark.sql.types.LongType, nullable = false)))
+    val seedRows = seedIds.map(v =>
+      org.apache.spark.sql.Row(v, v, 0, 1L)).toSeq
+    // EAGER localCheckpoint per round (not lazy persist): each round's
+    // plan references the previous round TWICE (push side + visited
+    // side), and two concurrent first-readers of an uncached
+    // InMemoryRelation each compute it — the recompute cascades through
+    // the round chain (measured 3× CPU). Checkpoint blocks are computed
+    // exactly once, in round order.
+    val spent = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    var state = sess.createDataFrame(
+      scala.jdk.CollectionConverters.SeqHasAsJava(seedRows).asJava,
+      seedSchema)
+    // the frontier is the rows DISCOVERED last round (all new at seed).
+    // The round's level is carried as a COLUMN from the frontier
+    // (lvl + 1), not a lit(i) literal: a baked-in literal makes each
+    // round's generated code a distinct class, so every round runs
+    // JIT-cold — with identical plan text all rounds share one codegen
+    // class, hot from round 2 (measured: the big rounds at first-run
+    // speed were the dominant loop cost).
+    var frontier = state
+    var i = 1
+    while (i <= maxDepth) {
+      // candidate fold: the frontier broadcasts into the
+      // __t-partitioned edges (map-only push); the (src, node) sum
+      // rides the alias partitioning — zero exchange for the round's
+      // dominant stream. min(__lvl) is exact: every frontier row
+      // carries the same level within a round.
+      val d = frontier.select(col("__src"), col("__n").as("__s"),
+        col("__sig"), col("__lvl"))
+      val cand = e.join(broadcast(d), Seq("__s"))
+        .select(col("__src"), col("__t").as("__n"), col("__sig"),
+          col("__lvl"))
+        .groupBy(col("__src"), col("__n"))
+        .agg(sum(col("__sig")).as("__c"),
+          (min(col("__lvl")) + 1).as("__nl"))
+      // delta merge as an ANTI against the visited keys: candidates
+      // hitting an existing (src, node) are discarded (their level is
+      // smaller by BFS — the "keep existing" arm); the survivors ARE
+      // this round's discoveries, σ already summed, and state is only
+      // ever UNIONED, never re-aggregated. The anti is shuffled-hash so
+      // nSources × |V| of visited state never has to fit a broadcast
+      // (state exchanges per round, delta-merge asymptotics unchanged).
+      val newRows = cand.join(
+          state.select(col("__src"), col("__n")).hint("shuffle_hash"),
+          Seq("__src", "__n"), "left_anti")
+        .select(col("__src"), col("__n"), col("__nl").as("__lvl"),
+          col("__c").as("__sig"))
         .ckpt()
-      Dedup.freeCheckpoints(spent.toSeq: _*)
-      out
+      spent += newRows
+      frontier = newRows
+      state = state.unionByName(newRows)
+      i += 1
+    }
+    // coalesce the union-of-rounds (1 + rounds × par cached parts)
+    // back to par partitions — no exchange, just fewer tiny tasks for
+    // the result checkpoint and its consumers
+    val out = state
+      .coalesce(sess.sparkContext.defaultParallelism)
+      .ckpt()
+    Dedup.freeCheckpoints(spent.toSeq: _*)
+    out
   }
 
   /** Sampled BETWEENNESS centrality — the full Brandes round over the
@@ -2744,23 +2622,22 @@ object Graph {
     * of the pair stream total, reused by BOTH passes. Output: (node,
     * betweenness) over every node reached at level ≥ 1 — deepest-level
     * nodes carry δ = 0, sources appear only where another source's
-    * tree reaches them. */
+    * tree reaches them. BIGINT ids that pass the `bcastDelta` gate run
+    * the driver kernel; every other id type always takes the
+    * distributed twin, whatever the flag says. */
   def betweennessSampled(pairs: DataFrame, uCol: String, vCol: String,
                          nSources: Int, maxDepth: Int,
                          dedupEdges: Boolean = false,
                          scaleBits: Int = 20,
                          bcastDelta: Option[Boolean] = None): DataFrame = {
     require(nSources >= 1, s"nSources must be >= 1, got $nSources")
-    // per-level state is ~ nSources x the node frame — scale the proxy
-    val bDelta = resolveBroadcast(bcastDelta, pairs, factor = nSources)
     require(maxDepth >= 1, s"maxDepth must be >= 1, got $maxDepth")
     require(scaleBits >= 1 && scaleBits <= 40,
       s"scaleBits must be in [1, 40], got $scaleBits")
     val scale = 1L << scaleBits
-    val longBwIds = pairs.schema(uCol).dataType ==
-      org.apache.spark.sql.types.LongType &&
-      pairs.schema(vCol).dataType == org.apache.spark.sql.types.LongType
-    if (bDelta && longBwIds) {
+    // per-level state is ~ nSources x the node frame — scale the proxy
+    if (bigintIds(pairs, uCol, vCol) &&
+        resolveBroadcast(bcastDelta, pairs, factor = nSources)) {
       // FULLY driver-resident Brandes (the pathCounts discipline, both
       // passes): the nSources-scaled gate says the pair stream fits
       // driver memory, so forward σ-BFS and the backward δ ladder run
@@ -2880,69 +2757,8 @@ object Graph {
     val spent = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val result = try {
       sess.conf.set("spark.sql.adaptive.enabled", "false")
-      val state = pathCountsLoop(e, nSources, maxDepth, bVisited = bDelta)
+      val state = pathCountsLoop(e, nSources, maxDepth)
       spent += state
-      if (bDelta) {
-        // DRIVER-RESIDENT backward pass (r18): the forward fast path
-        // already returned LocalRelation-backed (src, node, lvl, σ)
-        // rows, and the per-level δ/coefficient state is the same
-        // nSources × node-sized table the gate just declared
-        // broadcast-eligible. Each backward level is then ONE cluster
-        // job — the successor-coefficient fold F(v) = Σ c(w) over the
-        // target-partitioned edge frame with cur broadcast — and the
-        // DAG attach (lvl(v) = lvl(w) − 1, δ = σ·F, c = (S + δ) div σ)
-        // is a driver map fold instead of a per-level broadcast join +
-        // checkpoint. Integer arithmetic identical; `bDelta = false`
-        // below keeps the all-distributed ladder (spec-pinned equal).
-        val stateRows = state.collect()
-          .map(r => (r.get(0), r.get(1), r.getInt(2), r.getLong(3)))
-        val byLvl = stateRows.groupBy(_._3)
-        val nType = e.schema("__s").dataType
-        val fSchema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("__src", nType),
-          org.apache.spark.sql.types.StructField("__s", nType),
-          org.apache.spark.sql.types.StructField("__c",
-            org.apache.spark.sql.types.LongType, nullable = false)))
-        // deepest level: δ = 0, c = S div σ
-        var cur: Seq[(Any, Any, Long)] = byLvl.getOrElse(maxDepth, Array.empty)
-          .toSeq.map { case (s, n, _, sig) => (s, n, scale / sig) }
-        val deltaAcc = scala.collection.mutable.HashMap.empty[Any, Long]
-        var l = maxDepth - 1
-        while (l >= 1) {
-          val fMap: Map[(Any, Any), Long] =
-            if (cur.isEmpty) Map.empty
-            else {
-              val curDf = sess.createDataFrame(
-                scala.jdk.CollectionConverters.SeqHasAsJava(
-                  cur.map { case (s, n, c) =>
-                    org.apache.spark.sql.Row(s, n, c) }).asJava, fSchema)
-              e.join(broadcast(curDf), Seq("__s"))
-                .select(col("__src"), col("__t").as("__n"), col("__c"))
-                .groupBy(col("__src"), col("__n"))
-                .agg(sum(col("__c")).as("__f"))
-                .collect().map(r => (r.get(0), r.get(1)) -> r.getLong(2)).toMap
-            }
-          cur = byLvl.getOrElse(l, Array.empty).toSeq.map {
-            case (s, n, _, sig) =>
-              val delta = sig * fMap.getOrElse((s, n), 0L)
-              deltaAcc(n) = deltaAcc.getOrElse(n, 0L) + delta
-              (s, n, (scale + delta) / sig)
-          }
-          l -= 1
-        }
-        // the distributed union sums over EVERY level frame 1..maxDepth,
-        // so deepest-level nodes (δ = 0 by definition) emit rows too
-        stateRows.filter(_._3 == maxDepth).foreach { case (_, n, _, _) =>
-          deltaAcc.getOrElseUpdate(n, 0L) }
-        val outRows = deltaAcc.toSeq.map { case (n, d) =>
-          org.apache.spark.sql.Row(n, d) }
-        return sess.createDataFrame(
-          scala.jdk.CollectionConverters.SeqHasAsJava(outRows).asJava,
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("node", nType),
-            org.apache.spark.sql.types.StructField("betweenness",
-              org.apache.spark.sql.types.LongType, nullable = false))))
-      }
       // deepest level: no successors within the bound, δ = 0 by the
       // bounded-metric definition, c = SCALE div σ
       var cur = state.filter(col("__lvl") === maxDepth)
@@ -2958,17 +2774,15 @@ object Graph {
         // __t = v) so the (src, v) sum rides HashPartitioning(__t);
         // the inner attach to the level-l state slice both enforces
         // lvl(v) = lvl(w) − 1 (the DAG) and brings σ(v) for the
-        // δ = σ·F multiply. `bDelta = false` is the at-scale twin
-        // (shuffled-hash attach) for nSources × |V| past broadcast
-        // range — spec-pinned equal in GraphSpec.
+        // δ = σ·F multiply. The attach is shuffled-hash so nSources × |V|
+        // never has to fit a broadcast.
         val d = cur.select(col("__src"), col("__n").as("__s"), col("__c"))
         val f = e.join(broadcast(d), Seq("__s"))
           .select(col("__src"), col("__t").as("__n"), col("__c"))
           .groupBy(col("__src"), col("__n"))
           .agg(sum(col("__c")).as("__f"))
-        val fSide = if (bDelta) broadcast(f) else f.hint("shuffle_hash")
         cur = state.filter(col("__lvl") === l)
-          .join(fSide, Seq("__src", "__n"), "left")
+          .join(f.hint("shuffle_hash"), Seq("__src", "__n"), "left")
           .select(col("__src"), col("__n"),
             (col("__sig") * coalesce(col("__f"), lit(0L))).as("__delta"),
             col("__sig"))
@@ -3003,25 +2817,25 @@ object Graph {
     * the min-fold over dist + weight instead of hop counts — all-integer,
     * bit-identical cross-engine (the DuckDB twin replays the identical
     * chained relaxations). Both orientations expand in-row with the
-    * weight riding along. */
+    * weight riding along. BIGINT ids that pass the `bcastFrontier` gate
+    * run the driver kernel; every other id type always takes the
+    * distributed twin, whatever the flag says. */
   def ssspBounded(wedges: DataFrame, uCol: String, vCol: String,
                   wCol: String, rounds: Int,
                   bcastFrontier: Option[Boolean] = None): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     // frontier/dist frames are node-sized — bounded by the pair stream
-    val bFrontier = resolveBroadcast(bcastFrontier, wedges)
-    val longIds = wedges.schema(uCol).dataType ==
-      org.apache.spark.sql.types.LongType &&
-      wedges.schema(vCol).dataType == org.apache.spark.sql.types.LongType
-    if (bFrontier && longIds) {
+    if (bigintIds(wedges, uCol, vCol) &&
+        resolveBroadcast(bcastFrontier, wedges)) {
       // FULLY driver-resident Bellman-Ford (the kcorePeel discipline): the
       // gate that would have broadcast the frontier each round says the
       // weighted EDGE LIST itself fits driver memory, so collect it once
       // and relax on the driver — no doubled-orientation explode, no
       // checkpoint barrier, no per-round candidate-fold job (12 → 2 jobs
       // at sf0.1). Arithmetic is the identical integer min-relaxation;
-      // restricted to BIGINT ids so the output schema matches the twins
-      // exactly. Non-long or past-broadcast graphs take the paths below.
+      // restricted to BIGINT ids so the output schema matches the twin
+      // exactly. Other id types and past-broadcast graphs take the
+      // distributed loop below.
       val sess = wedges.sparkSession
       val rows = wedges
         .select(col(uCol), col(vCol), col(wCol).cast("bigint"))
@@ -3070,82 +2884,18 @@ object Graph {
             org.apache.spark.sql.Row(n, d) }).asJava, outSchema)
     }
     val par = wedges.sparkSession.sparkContext.defaultParallelism
-    // co-location choice as in [[orientedAdjacency]]: target-partitioned
-    // for the broadcast-frontier path (exchange-free candidate fold),
-    // source-partitioned for the shuffle twin
-    val eKey = if (bFrontier) "__t" else "__s"
+    // source-partitioned so the shuffled frontier join is co-located
     val e = wedges.select(explode(array(
         struct(col(uCol).as("__s"), col(vCol).as("__t"), col(wCol).as("__w")),
         struct(col(vCol).as("__s"), col(uCol).as("__t"), col(wCol).as("__w"))))
         .as("__e"))
       .select(col("__e.__s").as("__s"), col("__e.__t").as("__t"),
         col("__e.__w").cast("bigint").as("__w"))
-      .repartition(par, col(eKey))
+      .repartition(par, col("__s"))
       .ckpt()
     val sess = e.sparkSession
     val aqeWas = sess.conf.get("spark.sql.adaptive.enabled", "true")
     val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    if (bFrontier) {
-      // DRIVER-RESIDENT distance state (r17 chain-shortening): the dist
-      // table is node-sized and resolveBroadcast just declared it
-      // broadcast-eligible — state that fits an executor broadcast fits
-      // the driver, so the per-round full-outer merge + eager checkpoint
-      // (one cluster job each, plus its broadcast-build jobs) collapses
-      // to ONE cluster job per relaxation: the candidate fold's
-      // node-keyed min, collected. The frontier re-enters each round as
-      // a LocalRelation broadcast (built driver-side, no job). The heavy
-      // stream — edges and the candidate fold — never leaves the
-      // cluster; only the node-sized fold RESULT crosses. Arithmetic is
-      // identical (integer min over dist + w), and the
-      // `bcastFrontier = false` twin below keeps the all-distributed
-      // loop for graphs whose node frame outgrows a broadcast
-      // (spec-pinned equal in GraphSpec).
-      try {
-        sess.conf.set("spark.sql.adaptive.enabled", "false")
-        val seedRow = e.agg(min(col("__s"))).head()
-        if (seedRow.isNullAt(0)) {
-          return e.limit(0)
-            .select(col("__s").as("node"), col("__w").as("dist"))
-            .localCheckpoint()
-        }
-        val nType = e.schema("__s").dataType
-        val fSchema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("__s", nType),
-          org.apache.spark.sql.types.StructField("__d",
-            org.apache.spark.sql.types.LongType, nullable = false)))
-        val dist = scala.collection.mutable.HashMap[Any, Long](
-          seedRow.get(0) -> 0L)
-        var delta: Seq[(Any, Long)] = Seq(seedRow.get(0) -> 0L)
-        var r = 0
-        while (r < rounds && delta.nonEmpty) {
-          val fDf = sess.createDataFrame(
-            scala.jdk.CollectionConverters.SeqHasAsJava(
-              delta.map { case (n, d) =>
-                org.apache.spark.sql.Row(n, d) }).asJava, fSchema)
-          val folded = e.join(broadcast(fDf), Seq("__s"))
-            .select(col("__t").as("__n"), (col("__d") + col("__w")).as("__d"))
-            .groupBy(col("__n")).agg(min(col("__d")).as("__c"))
-            .collect()
-          delta = folded.toSeq.flatMap { row =>
-            val n = row.get(0); val c = row.getLong(1)
-            if (dist.get(n).forall(c < _)) { dist(n) = c; Some(n -> c) }
-            else None
-          }
-          r += 1
-        }
-        val outRows = dist.toSeq.map { case (n, d) =>
-          org.apache.spark.sql.Row(n, d) }
-        return sess.createDataFrame(
-          scala.jdk.CollectionConverters.SeqHasAsJava(outRows).asJava,
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("node", nType),
-            org.apache.spark.sql.types.StructField("dist",
-              org.apache.spark.sql.types.LongType, nullable = false))))
-      } finally {
-        sess.conf.set("spark.sql.adaptive.enabled", aqeWas)
-        Dedup.freeCheckpoints(e)
-      }
-    }
     val result = try {
       sess.conf.set("spark.sql.adaptive.enabled", "false")
       // the source seed stays LAZY (min over the checkpointed blocks,
@@ -3167,13 +2917,12 @@ object Graph {
       var delta = dist
       var r = 0
       while (r < rounds) {
-        // join strategy pins as in [[minLabelDeltaRound]]: the frontier
-        // broadcasts into the __s-partitioned edges (shuffled-hash twin
-        // for billion-node graphs), and the merge sees both sides
-        // __n-partitioned
+        // join strategy pins as in [[minLabelDeltaRound]]'s twin: the
+        // frontier shuffle-hash joins the __s-partitioned edges (no
+        // node-sized broadcast, so billion-node graphs fit), and the
+        // merge sees both sides __n-partitioned
         val d = delta.select(col("__n").as("__s"), col("__d"))
-        val dSide = if (bFrontier) broadcast(d) else d.hint("shuffle_hash")
-        val cand = e.join(dSide, Seq("__s"))
+        val cand = e.join(d.hint("shuffle_hash"), Seq("__s"))
           .select(col("__t").as("__n"), (col("__d") + col("__w")).as("__d"))
           .groupBy(col("__n")).agg(min(col("__d")).as("__c"))
         // full outer: candidates may REACH nodes dist has never seen
@@ -3246,25 +2995,6 @@ object Graph {
         coalesce(col("__sup"), lit(0L)).cast("bigint").as("support"))
   }
 
-  /** Bounded-round K-TRUSS peel: `rounds` rounds of "drop edges with
-    * triangle support < k−2", then the support HISTOGRAM of the
-    * surviving induced subgraph — (support, n_edges). The fixed round
-    * count keeps the result a deterministic cross-engine twin (the
-    * [[kcorePeel]] convention, over edges instead of nodes); each round
-    * re-runs [[edgeSupportBody]] on the survivors, so the cost is
-    * rounds+1 edge-iterator passes with no wedge materialization
-    * anywhere. The oracle replays the identical rounds with the
-    * wedge-pair-count formulation (portable SQL has no sorted-array
-    * intersection). */
-  /** Driver-side per-edge triangle support over int-indexed undirected
-    * edges — the degree-oriented forward algorithm ([[edgeSupportBody]]'s
-    * exact semantics in one memory pass): rank nodes by (degree, id),
-    * orient every edge low→high rank, keep rank-sorted higher-rank
-    * adjacency with a parallel edge-id array, and merge-intersect the two
-    * lists of each oriented edge — every triangle is found exactly once
-    * at its lowest-rank corner and pushes one support count to each of
-    * its three edges. Primitive arrays throughout (packed rank<<32|eid
-    * entries). Cost Σ(|A⁺(s)|+|A⁺(t)|) per pass, never wedge-sized. */
   /** Sorted-distinct id array + both-orientation CSR adjacency over a
     * collected raw pair array — the shared substrate of the driver-
     * resident graph tiers (pathCounts / betweennessSampled /
@@ -3469,8 +3199,7 @@ object Graph {
                                     pairBound: Boolean = false)
       : Option[BasketIndex] = {
     if (flag.contains(false)) return None
-    if (items.schema(gCol).dataType != LongType ||
-        items.schema(iCol).dataType != LongType) {
+    if (!bigintIds(items, gCol, iCol)) {
       require(!flag.contains(true),
         s"basket driver tier forced but ($gCol, $iCol) are not BIGINT")
       return None
@@ -3565,6 +3294,15 @@ object Graph {
       if (heap.size < k) Double.NegativeInfinity else heap.peek() - 2e-6
   }
 
+  /** Driver-side per-edge triangle support over int-indexed undirected
+    * edges — the degree-oriented forward algorithm ([[edgeSupportBody]]'s
+    * exact semantics in one memory pass): rank nodes by (degree, id),
+    * orient every edge low→high rank, keep rank-sorted higher-rank
+    * adjacency with a parallel edge-id array, and merge-intersect the two
+    * lists of each oriented edge — every triangle is found exactly once
+    * at its lowest-rank corner and pushes one support count to each of
+    * its three edges. Primitive arrays throughout (packed rank<<32|eid
+    * entries). Cost Σ(|A⁺(s)|+|A⁺(t)|) per pass, never wedge-sized. */
   private def driverEdgeSupport(eu: Array[Int], ev: Array[Int],
                                 n: Int): Array[Long] = {
     val m = eu.length
@@ -3894,77 +3632,67 @@ object Graph {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     collectBaskets(items, gCol, iCol, flag, pairBound = true) match {
       case Some(bi) =>
-        var (eu, ev, _) = pairRuns(bi.expandPairs())
-        var r0 = 0
-        while (r0 < rounds) {
-          val sup = driverEdgeSupport(eu, ev, bi.nItems)
-          val keep = sup.indices.filter(i => sup(i) >= k - 2).toArray
-          eu = keep.map(eu)
-          ev = keep.map(ev)
-          r0 += 1
-        }
-        val hist = scala.collection.mutable.HashMap.empty[Long, Long]
-        driverEdgeSupport(eu, ev, bi.nItems).foreach { s =>
-          hist(s) = hist.getOrElse(s, 0L) + 1L }
-        localDf(items.sparkSession, StructType(Seq(
-          StructField("support", LongType, nullable = false),
-          StructField("n_edges", LongType, nullable = false))),
-          hist.toSeq.map { case (s, c) => Row(s, c) })
+        val (eu, ev, _) = pairRuns(bi.expandPairs())
+        driverTrussPeel(items.sparkSession, eu, ev, bi.nItems, k, rounds)
       case None => trussPeel(distEdges, "u", "v", k, rounds)
     }
   }
 
+  /** The driver tiers' k-truss peel over int-indexed edges: `rounds`
+    * [[driverEdgeSupport]] passes that drop edges with support < k−2,
+    * then one more for the survivors' (support, n_edges) histogram. */
+  private def driverTrussPeel(sess: SparkSession, eu0: Array[Int],
+                              ev0: Array[Int], n: Int, k: Int,
+                              rounds: Int): DataFrame = {
+    var eu = eu0
+    var ev = ev0
+    var r = 0
+    while (r < rounds) {
+      val sup = driverEdgeSupport(eu, ev, n)
+      val keep = sup.indices.filter(i => sup(i) >= k - 2).toArray
+      eu = keep.map(eu)
+      ev = keep.map(ev)
+      r += 1
+    }
+    val hist = scala.collection.mutable.HashMap.empty[Long, Long]
+    driverEdgeSupport(eu, ev, n).foreach { s =>
+      hist(s) = hist.getOrElse(s, 0L) + 1L }
+    localDf(sess, StructType(Seq(
+      StructField("support", LongType, nullable = false),
+      StructField("n_edges", LongType, nullable = false))),
+      hist.toSeq.map { case (s, c) => Row(s, c) })
+  }
+
+  /** Bounded-round K-TRUSS peel: `rounds` rounds of "drop edges with
+    * triangle support < k−2", then the support HISTOGRAM of the
+    * surviving induced subgraph — (support, n_edges). The fixed round
+    * count keeps the result a deterministic cross-engine twin (the
+    * [[kcorePeel]] convention, over edges instead of nodes); each round
+    * re-runs [[edgeSupportBody]] on the survivors, so the cost is
+    * rounds+1 edge-iterator passes with no wedge materialization
+    * anywhere. The oracle replays the identical rounds with the
+    * wedge-pair-count formulation (portable SQL has no sorted-array
+    * intersection). */
   def trussPeel(edges: DataFrame, uCol: String, vCol: String,
                 k: Int, rounds: Int,
                 broadcastAdj: Option[Boolean] = None): DataFrame = {
     require(k >= 2, s"k must be >= 2, got $k")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val longTrussIds = edges.schema(uCol).dataType ==
-      org.apache.spark.sql.types.LongType &&
-      edges.schema(vCol).dataType == org.apache.spark.sql.types.LongType
-    if (longTrussIds && resolveBroadcast(broadcastAdj, edges)) {
+    if (bigintIds(edges, uCol, vCol) && resolveBroadcast(broadcastAdj, edges)) {
       // DRIVER-RESIDENT peel (the kcorePeel discipline): the gate says
       // the edge list fits driver memory, so ALL rounds+1 support passes
       // run as [[driverEdgeSupport]] folds over one collect — no
       // adjacency aggregation, no triangle-corner exchange, no
       // per-round checkpoint barrier. The distributed loop below stays
       // the spec-pinned twin for edge lists past broadcast range.
-      val sess = edges.sparkSession
       val rows = edges.select(col(uCol), col(vCol))
         .collect2
       val ids = rows.flatMap(p => Array(p._1, p._2))
-      java.util.Arrays.sort(ids)
-      var n0 = 0
-      var ri = 0
-      while (ri < ids.length) {
-        if (n0 == 0 || ids(ri) != ids(n0 - 1)) { ids(n0) = ids(ri); n0 += 1 }
-        ri += 1
-      }
+      val n0 = sortDedup(ids)
       def lk(x: Long): Int =
         java.util.Arrays.binarySearch(ids, 0, n0, x)
-      var eu = rows.map(p => lk(p._1))
-      var ev = rows.map(p => lk(p._2))
-      var r0 = 0
-      while (r0 < rounds) {
-        val sup = driverEdgeSupport(eu, ev, n0)
-        val keep = sup.indices.filter(i => sup(i) >= k - 2).toArray
-        eu = keep.map(eu)
-        ev = keep.map(ev)
-        r0 += 1
-      }
-      val hist = scala.collection.mutable.HashMap.empty[Long, Long]
-      driverEdgeSupport(eu, ev, n0).foreach { s =>
-        hist(s) = hist.getOrElse(s, 0L) + 1L }
-      val lng = org.apache.spark.sql.types.LongType
-      return sess.createDataFrame(
-        scala.jdk.CollectionConverters.SeqHasAsJava(
-          hist.toSeq.map { case (s, c) =>
-            org.apache.spark.sql.Row(s, c) }).asJava,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("support", lng,
-            nullable = false),
-          org.apache.spark.sql.types.StructField("n_edges", lng,
-            nullable = false))))
+      return driverTrussPeel(edges.sparkSession, rows.map(p => lk(p._1)),
+        rows.map(p => lk(p._2)), n0, k, rounds)
     }
     var e = edges.select(col(uCol).as("u"), col(vCol).as("v"))
       .ckpt()
@@ -4271,7 +3999,7 @@ object Graph {
       .select(col("__src"), col("__t").as("__n"), col("__sig"), col("__lvl"))
       .groupBy(col("__src"), col("__n"))
       .agg(sum(col("__sig")).as("__c"), (min(col("__lvl")) + 1).as("__nl"))
-    cand.join(broadcast(state.select(col("__src"), col("__n"))),
+    cand.join(state.select(col("__src"), col("__n")).hint("shuffle_hash"),
         Seq("__src", "__n"), "left_anti")
       .select(col("__src"), col("__n"), col("__nl").as("lvl"),
         col("__c").as("paths"))

@@ -799,6 +799,56 @@ class GraphSpec extends AnyFunSuite with SparkSpec {
     assert(empty.columns.toSeq == Seq("node", "dist"))
   }
 
+  test("non-BIGINT ids: multiSourceBfs, pathCounts, betweennessSampled " +
+      "and ssspBounded return the BIGINT rows for INT and STRING ids at " +
+      "every tier flag, and keep the caller's id type") {
+    import spark.implicits._
+    import org.apache.spark.sql.{Column, DataFrame, Row}
+    import org.apache.spark.sql.functions.{col, format_string}
+    import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType}
+    val rnd = new scala.util.Random(29)
+    val (es, _) = randomGraph(29, 24, 110)
+    val base = es.map { case (u, v) => (u, v, 1L + rnd.nextInt(9)) }
+      .toDF("u", "v", "w")
+    // the same graph three ways: (id type, encode, decode back to BIGINT);
+    // zero-padded strings sort like the numbers, so "the smallest ids"
+    // names the same sources under every encoding
+    val encodings: Seq[(DataType, Column => Column, (Row, Int) => Long)] = Seq(
+      (LongType, c => c, (r, i) => r.getLong(i)),
+      (IntegerType, c => c.cast("int"), (r, i) => r.getInt(i).toLong),
+      (StringType, c => format_string("n%03d", c),
+        (r, i) => r.getString(i).drop(1).toLong))
+    // (operator, output id columns, run at a tier flag)
+    val ops: Seq[(String, Seq[Int], (DataFrame, Option[Boolean]) => DataFrame)] = Seq(
+      ("multiSourceBfs", Seq(0, 1),
+        (df, f) => Graph.multiSourceBfs(df, "u", "v", 3, 4, bcastState = f)),
+      ("pathCounts", Seq(0, 1),
+        (df, f) => Graph.pathCounts(df, "u", "v", 3, 4, bcastVisited = f)),
+      ("betweennessSampled", Seq(0),
+        (df, f) => Graph.betweennessSampled(df, "u", "v", 3, 4,
+          bcastDelta = f)),
+      ("ssspBounded", Seq(0),
+        (df, f) => Graph.ssspBounded(df, "u", "v", "w", 3,
+          bcastFrontier = f)))
+    for ((name, idCols, run) <- ops) {
+      def rows(out: DataFrame, decode: (Row, Int) => Long) =
+        out.collect().map(r => r.toSeq.indices.map(i =>
+          if (idCols.contains(i)) decode(r, i) else r.get(i))).toSeq
+          .sortBy(_.toString)
+      val want = rows(run(base, None), encodings.head._3)
+      assert(want.nonEmpty, name)
+      for ((t, encode, decode) <- encodings;
+           flag <- Seq(None, Some(true), Some(false))) {
+        val in = base.select(encode(col("u")).as("u"),
+          encode(col("v")).as("v"), col("w"))
+        val out = run(in, flag)
+        val clue = s"$name ids=${t.simpleString} flag=$flag"
+        idCols.foreach(i => assert(out.schema(i).dataType == t, clue))
+        assert(rows(out, decode) == want, clue)
+      }
+    }
+  }
+
   test("edgeSupport equals brute-force common-neighbor counts per edge, " +
       "both join paths; trussPeel equals the brute-force edge peel") {
     import spark.implicits._
